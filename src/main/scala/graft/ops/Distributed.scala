@@ -324,7 +324,11 @@ object Distributed {
           if (2 * (cum + c) >= totals(g)) found = Some((bk, cum))
           else cum += c
         }
-        val (bk, cumBefore) = found.get // crossing exists: Σc = n_g
+        require(found.isDefined,
+          s"groupedLowerMedianLong: group '$g' has no median crossing — " +
+            s"its total weight ${totals(g)} exceeds the summed weight of " +
+            "its rows; statsIn totals must equal the exact summed weight")
+        val (bk, cumBefore) = found.get
         before += g -> cumBefore
         conds += g -> (conds(g) && (shiftright(v, sh) === lit(bk)))
         if (sh == 0) result += g -> bk

@@ -480,9 +480,6 @@ object Unigram {
       (wp, wp.count())
     }
 
-  private def wordPieceCounts(s: SparkSession, d: String): DataFrame =
-    wordPieceCountsWithRows(s, d)._1
-
   /** q_unigram_encode — apply the shipped model: Viterbi-segment the
     * DISTINCT words once under the final costs, broadcast the per-word
     * piece counts back to documents, and report per-doc word vs

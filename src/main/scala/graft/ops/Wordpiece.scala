@@ -215,9 +215,6 @@ object Wordpiece {
       (wp, wp.count())
     }
 
-  private[graft] def wordPieceCounts(s: SparkSession, d: String)
-      : DataFrame = wordPieceCountsWithRows(s, d)._1
-
   // --------------------------------------------------------- oracle SQL
 
   /** The shared train chain, name-prefixed with `p`: v0 (bracket-

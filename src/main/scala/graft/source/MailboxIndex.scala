@@ -99,26 +99,6 @@ object MailboxIndex {
       blocks: Array[Block],
       ts: TsStats) {
 
-    /** Exact delivery-time MIN/MAX over the rows matching `filter`:
-      * None when the statistics cannot answer (a matching class has
-      * head-less rows, or the filter wants folders — folders carry no
-      * delivery time); Some((min, max, nonNullRows)) otherwise, min/max
-      * meaningful only when nonNullRows > 0 (SQL MIN/MAX of all-null is
-      * NULL).
-      */
-    def deliveryStats(filter: RecordFilter): Option[(Long, Long, Long)] =
-      if (filter.wantFolder) None
-      else {
-        val ms = matchingClasses(filter)
-        if (ms.exists(i => ts.unknown(i) > 0)) None
-        else {
-          val withVals = ms.filter(i => ts.nonNull(i) > 0)
-          val n = withVals.map(ts.nonNull).sum
-          if (withVals.isEmpty) Some((Long.MaxValue, Long.MinValue, 0L))
-          else Some((withVals.map(ts.min).min, withVals.map(ts.max).max, n))
-        }
-      }
-
     /** Index positions of message classes (stored namespaced as "m:…",
       * so the folder marker can never collide) matching the plan
       * filter — taxonomy + exact-equality semantics live in
@@ -132,11 +112,11 @@ object MailboxIndex {
           filter.matchesClass(classes(i).substring(2)))
         .toArray
 
-    /** Per-matching-class rows for GROUP BY message_class pushdown:
-      * (raw class, total, tsMin, tsMax, tsNonNull, tsUnknown). The
-      * caller merges across files and decides whether the timestamp
-      * side is conclusive; counts are always exact. None for folder
-      * scans (no message_class grouping there).
+    /** Per-matching-class rows for aggregate pushdown: (raw class,
+      * total, tsMin, tsMax, tsNonNull, tsUnknown). The caller merges
+      * across files and decides whether the timestamp side is
+      * conclusive; counts are always exact. None for folder scans
+      * (folders carry no class or delivery time).
       */
     def classGroupStats(filter: RecordFilter)
         : Option[Seq[(String, Long, Long, Long, Long, Long)]] =

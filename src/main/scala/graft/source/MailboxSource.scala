@@ -19,7 +19,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
+import org.apache.spark.sql.connector.expressions.{Expression => ConnectorExpression}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter}
@@ -46,14 +47,23 @@ import graft.model.MailboxSchema.Mode
   *    size-based byte-range splits; readers discover record boundaries
   *    with the first-newline-after-offset rule (Hadoop's
   *    LineRecordReader convention). Planning never reads the corpus.
+  *  - one sealed partition hierarchy ([[MailboxPartition]]): static
+  *    rows answered at plan time, or a file slice — `.mbx` indexed row
+  *    ranges, byte ranges, enumerated offsets, or PST node ids — with
+  *    one reader per shape ([[StaticRowsReader]],
+  *    [[MailboxPartitionReader]], [[PstPartitionReader]]),
   *  - fixed-size row partitions + exact statistics when indexed (A4, A8),
   *  - plan-time message-class filtering for typed modes and pushed
   *    `message_class = '…'` predicates (A5),
   *  - exact `read_limit` / SupportsPushDownLimit allocation (A6),
   *  - projection pushdown — unprojected columns are never parsed (A7;
   *    row_serializer.cpp:1211-1266),
-  *  - count(*) pushdown: zero execution IO on indexed files, a
-  *    distributed classify-only scan otherwise (A9),
+  *  - count(*) pushdown: static rows wherever planning knows the count
+  *    exactly (zero execution IO on indexed files); elsewhere the row
+  *    reader over an empty projection, classify-only, counted by
+  *    [[CountingReader]] (A9),
+  *  - count / delivery-time MIN/MAX, ungrouped or GROUP BY
+  *    message_class, answered from sidecar statistics (A9),
   *  - virtual row-id columns `__partition`/`__node_id` for late
   *    materialization (A10; schema.hpp:11-17),
   *  - per-task scan metrics: rows / bytes / files read (A11; reference
@@ -172,6 +182,10 @@ final case class RecordFilter(
 }
 
 object MailboxTable {
+  /** Columns a reader fills from the partition, not from the record. */
+  private[source] val MetaColumns =
+    Set("pst_path", "pst_name", "__partition", "__node_id")
+
   def schemaFor(opts: MailboxOptions): StructType = {
     val base = MailboxSchema.schemaFor(opts.mode)
     if (opts.virtualColumns) StructType(base ++ MailboxSchema.virtualFields)
@@ -190,17 +204,33 @@ class MailboxTable(val opts: MailboxOptions) extends Table with SupportsRead {
 }
 
 /** One planned partition (A4; reference PSTInputPartition,
-  * table_function.hpp:87-105). Three shapes:
-  *  - [[IndexedPartition]]: sidecar-planned — starts at a block
-  *    checkpoint, skips `skipMatching` matching rows, emits
-  *    `takeMatching` (exact count known at plan time);
-  *  - [[RangePartition]]: a byte range of an unindexed file — the reader
-  *    discovers record boundaries (first newline after `start`) and
-  *    emits every matching record starting inside the range;
-  *  - [[EnumeratedPartition]]: explicit row offsets (bounded-limit
-  *    planning on unindexed files only).
+  * table_function.hpp:87-105). Two shapes:
+  *  - [[StaticRowsPartition]]: rows already known on the driver — a
+  *    planned count(*) or a sidecar-statistics aggregate; zero IO;
+  *  - [[FilePartition]]: a slice of one file that a task reads.
   */
-sealed trait MailboxPartition extends InputPartition {
+sealed trait MailboxPartition extends InputPartition
+
+/** Precomputed rows, emitted with zero execution IO. `rowsRead` is the
+  * rows-read metric the partition reports: the count it stands for when
+  * it answers count(*) from planning statistics, 0 for a statistics
+  * aggregate. A count over files whose counts are all exact collapses
+  * to ONE such partition carrying the total: a 167-file archive costs
+  * one task instead of one per planned slice (measured 0.84 s → ~0.2 s
+  * on the 1.17M-message reference-scale probe,
+  * `graft.tools.RefScaleBench`).
+  */
+final case class StaticRowsPartition(rows: Array[InternalRow], rowsRead: Long)
+  extends MailboxPartition
+
+object StaticRowsPartition {
+  /** One count(*) row standing for `count` rows read. */
+  def count(count: Long): StaticRowsPartition =
+    StaticRowsPartition(Array(new GenericInternalRow(Array[Any](count))), count)
+}
+
+/** A slice of one file, read by a task. */
+sealed trait FilePartition extends MailboxPartition {
   def index: Int
   def file: String
 
@@ -211,19 +241,31 @@ sealed trait MailboxPartition extends InputPartition {
   def firstInFile: Boolean
 }
 
+/** A slice of an `.mbx` JSONL dump. Three shapes:
+  *  - [[IndexedPartition]]: sidecar-planned — starts at a block
+  *    checkpoint, skips `skipMatching` matching rows, emits
+  *    `takeMatching` (exact count known at plan time);
+  *  - [[RangePartition]]: a byte range of an unindexed file — the reader
+  *    discovers record boundaries (first newline after `start`) and
+  *    emits every matching record starting inside the range;
+  *  - [[EnumeratedPartition]]: explicit row offsets (bounded-limit
+  *    planning on unindexed files only).
+  */
+sealed trait MbxPartition extends FilePartition
+
 final case class IndexedPartition(
     index: Int, file: String, startOffset: Long,
     skipMatching: Long, takeMatching: Long,
-    firstInFile: Boolean = false) extends MailboxPartition
+    firstInFile: Boolean = false) extends MbxPartition
 
 final case class RangePartition(
     index: Int, file: String, start: Long, length: Long,
-    firstInFile: Boolean = false) extends MailboxPartition
+    firstInFile: Boolean = false) extends MbxPartition
 
 final case class EnumeratedPartition(
     index: Int, file: String,
     offsets: Array[Long], nodeIds: Array[Long],
-    firstInFile: Boolean = false) extends MailboxPartition
+    firstInFile: Boolean = false) extends MbxPartition
 
 /** A slice of a real PST file's plan-enumerated node ids (the analog of
   * the reference's node-id partition queue; see [[PstScan]]). When
@@ -235,42 +277,7 @@ final case class EnumeratedPartition(
 final case class PstPartition(
     index: Int, file: String, nodeIds: Array[Long],
     exact: Boolean = false,
-    firstInFile: Boolean = false) extends MailboxPartition
-
-/** A9 — when count(*) is answered entirely from planning statistics
-  * (every file's count exact), the scan collapses to ONE partition
-  * carrying the total: a 167-file archive costs one task instead of
-  * one per planned slice (measured 0.84 s → ~0.2 s on the
-  * 1.17M-message reference-scale probe, `graft.tools.RefScaleBench`).
-  */
-final case class TotalCountPartition(total: Long) extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
-}
-
-/** One static partition carrying a fully stats-answered aggregate row
-  * (count / delivery-time min/max from v3 sidecar statistics — zero
-  * execution IO, like [[TotalCountPartition]]).
-  */
-final case class StaticStatsPartition(values: Array[Long],
-    nulls: Array[Boolean]) extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
-}
-
-/** One static partition carrying a stats-answered GROUP BY
-  * message_class aggregate: one row per raw class, values aligned
-  * with the pushed schema's aggregate fields (zero execution IO).
-  */
-final case class GroupStatsPartition(classes: Array[String],
-    values: Array[Array[Long]], nulls: Array[Array[Boolean]])
-  extends MailboxPartition {
-  def index: Int = 0
-  def file: String = ""
-  def firstInFile: Boolean = false
-}
+    firstInFile: Boolean = false) extends FilePartition
 
 /** Driver-side planning: glob → per-file metadata (sidecar index or file
   * size) → partitions. Reads O(#files) bytes — sidecars, or a ≤160-byte
@@ -412,15 +419,6 @@ object MailboxPlanner {
     (offsets.toArray, nodes.toArray)
   }
 
-  /** Statistics-only probe for aggregate pushdown: the exact
-    * (matchingRows, Some((deliveryMin, deliveryMax)) when any non-null,
-    * nonNullRows) over the glob, answered ENTIRELY from fresh v3
-    * sidecars — O(#files) metadata reads, zero corpus IO. None when any
-    * member cannot answer exactly (PST members, absent/stale sidecars,
-    * inconclusive head statistics, a read_limit, or folder mode — the
-    * caller must fall back to the ordinary columnar scan plan, which is
-    * always correct).
-    */
   /** One sidecar read per glob member, fanned out on a bounded pool
     * (same O(#files) parallel-metadata discipline as [[plan]] — a
     * 10,000-file archive must not pay 10,000 serial round-trips at
@@ -449,35 +447,15 @@ object MailboxPlanner {
     } finally pool.shutdown()
   }
 
-  def statsProbe(opts: MailboxOptions, filter: RecordFilter,
-      conf: Configuration): Option[(Long, Option[(Long, Long)], Long)] = {
-    if (filter.wantFolder || opts.readLimit != Long.MaxValue) return None
-    parallelIndexProbe(opts, conf) { ix =>
-      ix.deliveryStats(filter).map(st => (ix.matchingCount(filter), st))
-    }.map { perFile =>
-      var count = 0L
-      var mn    = Long.MaxValue
-      var mx    = Long.MinValue
-      var n     = 0L
-      perFile.foreach { case (cnt, (fmn, fmx, fn)) =>
-        count += cnt
-        if (fn > 0) {
-          if (fmn < mn) mn = fmn
-          if (fmx > mx) mx = fmx
-          n += fn
-        }
-      }
-      (count, if (n > 0) Some((mn, mx)) else None, n)
-    }
-  }
-
-  /** Plan-time probe for GROUP BY message_class aggregates: per raw
-    * class across the whole glob, exact count plus (when `needTs`)
-    * conclusive delivery-time min/max. Refuses (None) when any glob
-    * member lacks a fresh sidecar, when a matching class is the empty
-    * string (a record head without the field — the scan would emit
-    * NULL there, which the sidecar conflates with ""), or when
-    * `needTs` and any matching class has inconclusive timestamp heads.
+  /** Statistics-only probe for aggregate pushdown: per raw message class
+    * across the whole glob, the exact matching row count plus the
+    * delivery-time (min, max) over the class's non-null rows (None when
+    * it has none) — answered ENTIRELY from fresh v3 sidecars, O(#files)
+    * metadata reads and zero corpus IO. None when any member cannot
+    * answer exactly (PST members, absent/stale sidecars, a read_limit,
+    * folder mode, or — when `needTs` — a matching class with
+    * inconclusive timestamp heads): the caller must fall back to the
+    * ordinary columnar scan plan, which is always correct.
     */
   def classStatsProbe(opts: MailboxOptions, filter: RecordFilter,
       conf: Configuration, needTs: Boolean)
@@ -489,12 +467,12 @@ object MailboxPlanner {
           String, (Long, Long, Long, Long)]() // cnt, mn, mx, nonNull
         perFile.foreach { rows =>
           rows.foreach { case (cls, cnt, mn, mx, n, unknown) =>
-            if (cls.isEmpty) return None
             if (needTs && unknown > 0) return None
             val (c0, mn0, mx0, n0) =
               acc.getOrElse(cls, (0L, Long.MaxValue, Long.MinValue, 0L))
-            acc(cls) = (c0 + cnt, math.min(mn0, mn), math.max(mx0, mx),
-              n0 + n)
+            acc(cls) =
+              if (n > 0) (c0 + cnt, math.min(mn0, mn), math.max(mx0, mx), n0 + n)
+              else (c0 + cnt, mn0, mx0, n0)
           }
         }
         Some(acc.toSeq.map { case (cls, (cnt, mn, mx, n)) =>
@@ -505,7 +483,7 @@ object MailboxPlanner {
 
   /** Plan result: partitions + what planning knew exactly. */
   final case class PlanResult(
-      partitions: Seq[MailboxPartition],
+      partitions: Seq[FilePartition],
       exactRows: Option[Long],
       totalBytes: Long,
       files: Int)
@@ -582,7 +560,7 @@ object MailboxPlanner {
         Await.result(Future.sequence(futures), Duration.Inf).flatten
       } finally pool.shutdown()
 
-    val parts   = new ArrayBuffer[MailboxPartition]()
+    val parts   = new ArrayBuffer[FilePartition]()
     var exact   = true
     var rows    = 0L
     var remain  = limit
@@ -682,10 +660,7 @@ class MailboxScanBuilder(opts: MailboxOptions)
   private var accepted: Array[Filter] = Array.empty
   private var limit: Option[Long] = None
   private var countStar: Boolean = false
-  private var pushedStats
-      : Option[(StructType, Array[Long], Array[Boolean])] = None
-  private var pushedGroups: Option[(StructType, Array[String],
-      Array[Array[Long]], Array[Array[Boolean]])] = None
+  private var pushedStats: Option[StatsAggregate] = None
 
   private def filter: RecordFilter = RecordFilter(opts.mode, exactClasses)
 
@@ -702,7 +677,7 @@ class MailboxScanBuilder(opts: MailboxOptions)
           if MailboxSchema.isMessageMode(opts.mode) => true
       case _ => false
     }
-    ok.foreach { case EqualTo(_, v: String) =>
+    ok.collect { case EqualTo(_, v: String) => v }.foreach { v =>
       if (!exactClasses.contains(v)) exactClasses :+= v
     }
     accepted = ok
@@ -719,139 +694,100 @@ class MailboxScanBuilder(opts: MailboxOptions)
   /** A9 — count(*) with no grouping is answered from planning statistics;
     * partial pushdown: each partition emits its exact count, Spark sums.
     *
-    * Beyond count(*): MIN/MAX(message_delivery_time) — alone, together,
-    * or mixed with count(*) — is answered from the v3 sidecars'
-    * per-class timestamp statistics (the parquet-footer-min/max analog)
-    * when EVERY glob member has fresh, conclusive stats; the
-    * [[MailboxPlanner.statsProbe]] decides at plan time, and anything
-    * it cannot answer exactly falls back to the ordinary columnar scan
-    * (Spark then aggregates the pruned timestamp column itself).
+    * Beyond count(*): MIN/MAX(message_delivery_time) and count(*) —
+    * ungrouped, or GROUP BY message_class — are answered from the v3
+    * sidecars' per-class statistics (the parquet-footer-min/max analog)
+    * when EVERY glob member has fresh, conclusive stats. The whole
+    * aggregate becomes one static partition: one row, or one row per
+    * raw class (partial pushdown: Spark still re-aggregates our rows,
+    * which is exact). [[MailboxPlanner.classStatsProbe]] decides at plan
+    * time, and anything it cannot answer exactly falls back to the
+    * ordinary columnar scan (Spark then aggregates the pruned columns
+    * itself).
     */
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (limit.nonEmpty) return false
-    val exprs = agg.aggregateExpressions()
-    if (agg.groupByExpressions.nonEmpty)
-      return pushGroupedAggregation(agg)
-    if (exprs.length == 1 && exprs(0).isInstanceOf[CountStar]) {
+    val exprs   = agg.aggregateExpressions()
+    val grouped = agg.groupByExpressions.nonEmpty
+    if (!grouped && exprs.length == 1 && exprs(0).isInstanceOf[CountStar]) {
       countStar = true
       return true
     }
-    val tsField = "message_delivery_time"
-    def tsRef(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Boolean = e match {
-      case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == tsField
+    val byClass = agg.groupByExpressions match {
+      case Array(nr: NamedReference) => nr.fieldNames.toSeq == Seq("message_class")
       case _ => false
     }
-    sealed trait Kind
-    object KCount extends Kind; object KMin extends Kind
-    object KMax extends Kind
-    val kinds: Array[Option[Kind]] = exprs.map {
-      case _: CountStar              => Some(KCount)
-      case m: Min if tsRef(m.column) => Some(KMin)
-      case m: Max if tsRef(m.column) => Some(KMax)
-      case _                         => None
+    if (grouped && !(byClass && MailboxSchema.isMessageMode(opts.mode)))
+      return false
+    val columns = exprs.map(MailboxScanBuilder.statsColumn)
+    if (columns.isEmpty || columns.exists(_.isEmpty)) return false
+    val (fields, values) = columns.map(_.get).toSeq.unzip
+    def row(key: Seq[Any], cnt: Long, minMax: Option[(Long, Long)]) =
+      new GenericInternalRow((key ++ values.map(_(cnt, minMax))).toArray)
+    val needTs = !exprs.forall(_.isInstanceOf[CountStar])
+    pushedStats = MailboxPlanner.classStatsProbe(opts, filter,
+        MailboxPlanner.activeHadoopConf(), needTs).flatMap { classes =>
+      if (!grouped) {
+        val withTs = classes.flatMap(_._3)
+        val minMax =
+          if (withTs.isEmpty) None // zero non-null rows: MIN/MAX is NULL
+          else Some((withTs.map(_._1).min, withTs.map(_._2).max))
+        Some(StatsAggregate(StructType(fields),
+          Array(row(Nil, classes.map(_._2).sum, minMax)), grouped = false))
+      } else if (classes.exists(_._1.isEmpty)) {
+        // a record head without message_class: the scan would group it
+        // under NULL, which the sidecar conflates with ""
+        None
+      } else Some(StatsAggregate(
+        StructType(StructField("message_class", StringType) +: fields),
+        classes.map { case (cls, cnt, minMax) =>
+          row(Seq(UTF8String.fromString(cls)), cnt, minMax)
+        }.toArray, grouped = true))
     }
-    if (kinds.exists(_.isEmpty)) return false
-    MailboxPlanner.statsProbe(opts, filter,
-      MailboxPlanner.activeHadoopConf()) match {
-      case Some((cnt, minMax, _)) =>
-        val fields = new Array[StructField](kinds.length)
-        val values = new Array[Long](kinds.length)
-        val nulls  = new Array[Boolean](kinds.length)
-        kinds.map(_.get).zipWithIndex.foreach {
-          case (KCount, i) =>
-            fields(i) = StructField("count(*)", LongType, nullable = false)
-            values(i) = cnt
-          case (k, i) =>
-            fields(i) = StructField(
-              s"${if (k == KMin) "min" else "max"}($tsField)",
-              TimestampType, nullable = true)
-            minMax match {
-              case Some((mn, mx)) => // epoch seconds → catalyst micros
-                values(i) = (if (k == KMin) mn else mx) * 1000000L
-              case None => nulls(i) = true // zero non-null rows
-            }
-        }
-        pushedStats = Some((StructType(fields.toSeq), values, nulls))
-        true
-      case None => false
-    }
-  }
-
-  /** GROUP BY message_class + {count(*), min/max(delivery time)} from
-    * the v3 sidecars' per-class statistics — the whole aggregate
-    * becomes one static partition emitting one row per raw class
-    * (partial pushdown: Spark still re-aggregates our per-class rows,
-    * which is exact). Refused unless every glob member's sidecar is
-    * fresh and conclusive for what the query needs — the probe's
-    * rules, see [[MailboxPlanner.classStatsProbe]].
-    */
-  private def pushGroupedAggregation(agg: Aggregation): Boolean = {
-    val gbOk = agg.groupByExpressions match {
-      case Array(nr: NamedReference) =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == "message_class"
-      case _ => false
-    }
-    if (!gbOk || !MailboxSchema.isMessageMode(opts.mode)) return false
-    val tsField = "message_delivery_time"
-    def tsRef(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Boolean = e match {
-      case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == tsField
-      case _ => false
-    }
-    sealed trait Kind
-    object KCount extends Kind; object KMin extends Kind
-    object KMax extends Kind
-    val kinds: Array[Option[Kind]] = agg.aggregateExpressions().map {
-      case _: CountStar              => Some(KCount)
-      case m: Min if tsRef(m.column) => Some(KMin)
-      case m: Max if tsRef(m.column) => Some(KMax)
-      case _                         => None
-    }
-    if (kinds.isEmpty || kinds.exists(_.isEmpty)) return false
-    val needTs = kinds.exists(k => k.get == KMin || k.get == KMax)
-    MailboxPlanner.classStatsProbe(opts, filter,
-      MailboxPlanner.activeHadoopConf(), needTs) match {
-      case Some(rows) =>
-        val aggFields = kinds.map(_.get).map {
-          case KCount =>
-            StructField("count(*)", LongType, nullable = false)
-          case KMin =>
-            StructField(s"min($tsField)", TimestampType, nullable = true)
-          case KMax =>
-            StructField(s"max($tsField)", TimestampType, nullable = true)
-        }
-        val schema = StructType(
-          StructField("message_class", StringType, nullable = true) +:
-            aggFields.toSeq)
-        val classes = rows.map(_._1).toArray
-        val values  = rows.map { case (_, cnt, minMax) =>
-          kinds.map(_.get).map {
-            case KCount => cnt
-            case KMin   => minMax.map(_._1 * 1000000L).getOrElse(0L)
-            case KMax   => minMax.map(_._2 * 1000000L).getOrElse(0L)
-          }
-        }.toArray
-        val nulls = rows.map { case (_, _, minMax) =>
-          kinds.map(_.get).map {
-            case KCount => false
-            case _      => minMax.isEmpty
-          }
-        }.toArray
-        pushedGroups = Some((schema, classes, values, nulls))
-        true
-      case None => false
-    }
+    pushedStats.isDefined
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean = false
 
   override def build(): Scan =
     new MailboxScan(opts, requiredSchema, filter, limit, countStar,
-      pushedStats, pushedGroups)
+      pushedStats)
 }
+
+object MailboxScanBuilder {
+  private val TsField = "message_delivery_time"
+
+  /** An aggregate the sidecar statistics answer — count(*) or
+    * MIN/MAX(message_delivery_time) — as its output field and its value
+    * from a (count, delivery (min, max) in epoch seconds) pair; None for
+    * anything else.
+    */
+  private def statsColumn(e: AggregateFunc)
+      : Option[(StructField, (Long, Option[(Long, Long)]) => Any)] = {
+    def ts(c: ConnectorExpression): Boolean = c match {
+      case nr: NamedReference => nr.fieldNames.toSeq == Seq(TsField)
+      case _ => false
+    }
+    def timestamp(name: String, pick: ((Long, Long)) => Long) = Some((
+      StructField(s"$name($TsField)", TimestampType, nullable = true),
+      (_: Long, minMax: Option[(Long, Long)]) =>
+        minMax.map(mm => pick(mm) * 1000000L: Any).orNull)) // → catalyst micros
+    e match {
+      case _: CountStar => Some((
+        StructField("count(*)", LongType, nullable = false),
+        (cnt: Long, _: Option[(Long, Long)]) => cnt))
+      case m: Min if ts(m.column) => timestamp("min", _._1)
+      case m: Max if ts(m.column) => timestamp("max", _._2)
+      case _ => None
+    }
+  }
+}
+
+/** A fully statistics-answered aggregate: its output schema and rows —
+  * one row, or one per raw class when `grouped` by message_class.
+  */
+final case class StatsAggregate(
+    schema: StructType, rows: Array[InternalRow], grouped: Boolean)
 
 /** A11 — scan progress metrics, mirroring the reference's % scanned
   * reporting (table_function.cpp:359-365) as Spark SQL custom metrics.
@@ -866,6 +802,12 @@ object MailboxMetrics {
     new MailboxFilesReadMetric)
 
   final case class Task(name: String, value: Long) extends CustomTaskMetric
+
+  /** The three task metrics every reader reports. */
+  def report(rows: Long, bytes: Long, firstInFile: Boolean)
+      : Array[CustomTaskMetric] = Array(
+    Task(RowsRead, rows), Task(BytesRead, bytes),
+    Task(FilesRead, if (firstInFile) 1L else 0L))
 }
 
 // top-level with 0-arg constructors: the SQL UI re-instantiates metric
@@ -889,9 +831,7 @@ class MailboxScan(
     filter: RecordFilter,
     limit: Option[Long],
     countStar: Boolean,
-    pushedStats: Option[(StructType, Array[Long], Array[Boolean])] = None,
-    pushedGroups: Option[(StructType, Array[String],
-        Array[Array[Long]], Array[Array[Boolean]])] = None)
+    pushedStats: Option[StatsAggregate] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
   // captured at plan time on the driver; shipped to executors so custom
@@ -908,12 +848,11 @@ class MailboxScan(
     MailboxPlanner.plan(effective, filter, serConf.value)
   }
 
-  override def readSchema(): StructType = (pushedStats, pushedGroups) match {
-    case (Some((schema, _, _)), _) => schema
-    case (None, Some((schema, _, _, _))) => schema
-    case _ if countStar =>
+  override def readSchema(): StructType = pushedStats match {
+    case Some(a) => a.schema
+    case None if countStar =>
       StructType(Seq(StructField("count(*)", LongType, nullable = false)))
-    case _ => requiredSchema
+    case None => requiredSchema
   }
 
   override def toBatch: Batch = this
@@ -922,18 +861,28 @@ class MailboxScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new MailboxMicroBatchStream(opts, requiredSchema, filter)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    (pushedStats, pushedGroups) match {
-      case (Some((_, values, nulls)), _) =>
-        // fully stats-answered: one partition, one row, zero IO (the
-        // probe already paid the O(#files) sidecar reads at push time)
-        Array(StaticStatsPartition(values, nulls))
-      case (None, Some((_, classes, values, nulls))) =>
-        Array(GroupStatsPartition(classes, values, nulls))
-      case _ if countStar && planned.exactRows.isDefined =>
-        Array(TotalCountPartition(planned.exactRows.get))
-      case _ => planned.partitions.toArray
+  /** A9 — under count(*), every partition whose count planning knows
+    * exactly becomes a one-row static partition; when all of them are
+    * exact the scan collapses to one partition carrying the total. The
+    * rest (byte ranges, class-filtered PST slices) are counted by a
+    * classify-only scan.
+    */
+  override def planInputPartitions(): Array[InputPartition] = pushedStats match {
+    // fully stats-answered: one partition, zero IO (the probe already
+    // paid the O(#files) sidecar reads at push time)
+    case Some(a) => Array(StaticRowsPartition(a.rows, 0L))
+    case None if countStar => planned.exactRows match {
+      case Some(total) => Array(StaticRowsPartition.count(total))
+      case None => planned.partitions.map {
+        case ip: IndexedPartition    => StaticRowsPartition.count(ip.takeMatching)
+        case ep: EnumeratedPartition => StaticRowsPartition.count(ep.offsets.length)
+        case pp: PstPartition if pp.exact =>
+          StaticRowsPartition.count(pp.nodeIds.length)
+        case fp => fp
+      }.toArray
     }
+    case None => planned.partitions.toArray
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MailboxReaderFactory(readSchema(), opts, filter, countStar, serConf)
@@ -943,121 +892,88 @@ class MailboxScan(
 
   /** A8 — exact cardinality when planning knew it (sidecar-indexed or
     * enumerated); size-only estimate for range-planned files. A
-    * stats-answered aggregate is one row and must not force a plan.
+    * stats-answered aggregate is a few rows and must not force a plan.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(
-        if (pushedStats.isDefined) 64L
-        else if (pushedGroups.isDefined)
-          64L * pushedGroups.get._2.length
-        else planned.exactRows.map(_ * 512L).getOrElse(planned.totalBytes))
+      java.util.OptionalLong.of(pushedStats.map(64L * _.rows.length)
+        .getOrElse(planned.exactRows.map(_ * 512L).getOrElse(planned.totalBytes)))
     override def numRows(): java.util.OptionalLong =
-      if (pushedStats.isDefined) java.util.OptionalLong.of(1L)
-      else if (pushedGroups.isDefined)
-        java.util.OptionalLong.of(pushedGroups.get._2.length.toLong)
-      else planned.exactRows
-        .map(java.util.OptionalLong.of)
+      pushedStats.map(a => java.util.OptionalLong.of(a.rows.length.toLong))
+        .orElse(planned.exactRows.map(java.util.OptionalLong.of))
         .getOrElse(java.util.OptionalLong.empty())
   }
 
   /** A12 — EXPLAIN metadata, mirroring PSTDynamicToString. */
   override def description(): String = {
-    if (pushedStats.isDefined)
-      s"mailbox mode=${opts.mode} statsAggPushdown=true " +
-        s"[${pushedStats.get._1.fieldNames.mkString(", ")}]" +
-        (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
-    else if (pushedGroups.isDefined)
-      s"mailbox mode=${opts.mode} statsAggPushdown=group " +
-        s"groups=${pushedGroups.get._2.length} " +
-        s"[${pushedGroups.get._1.fieldNames.mkString(", ")}]" +
-        (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
-    else s"mailbox mode=${opts.mode} files=${planned.files} " +
-      s"partitions=${planned.partitions.length}" +
-      planned.exactRows.map(r => s" rows=$r").getOrElse(" rows=est") +
-      (if (countStar) " countStarPushdown=true" else "") +
-      limit.map(l => s" limit=$l").getOrElse("") +
-      (if (filter.filtersClass) s" classFilter=${filter.describe}" else "")
+    val classFilter =
+      if (filter.filtersClass) s" classFilter=${filter.describe}" else ""
+    pushedStats match {
+      case Some(a) =>
+        s"mailbox mode=${opts.mode} statsAggPushdown=" +
+          (if (a.grouped) s"group groups=${a.rows.length}" else "true") +
+          s" [${a.schema.fieldNames.mkString(", ")}]" + classFilter
+      case None =>
+        s"mailbox mode=${opts.mode} files=${planned.files} " +
+          s"partitions=${planned.partitions.length}" +
+          planned.exactRows.map(r => s" rows=$r").getOrElse(" rows=est") +
+          (if (countStar) " countStarPushdown=true" else "") +
+          limit.map(l => s" limit=$l").getOrElse("") + classFilter
+    }
   }
 }
 
+/** One reader per partition shape: static rows, PST node slices, `.mbx`
+  * slices. Under a pushed count(*) a file's row reader projects nothing
+  * — it only classifies — and [[CountingReader]] turns its rows into one
+  * count, so a count always equals the rows the same scan returns.
+  */
 class MailboxReaderFactory(
     readSchema: StructType,
     opts: MailboxOptions,
     filter: RecordFilter,
     countStar: Boolean,
     serConf: SerializableConfiguration) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[MailboxPartition]
-    p match {
-      case sp: StaticStatsPartition =>
-        return new StaticStatsReader(sp.values, sp.nulls)
-      case gp: GroupStatsPartition =>
-        return new GroupStatsReader(gp.classes, gp.values, gp.nulls)
-      case _ => ()
-    }
-    if (countStar) p match {
-      case tp: TotalCountPartition => new StaticCountReader(tp.total)
-      case ip: IndexedPartition    => new StaticCountReader(ip.takeMatching)
-      case ep: EnumeratedPartition => new StaticCountReader(ep.offsets.length.toLong)
-      case rp: RangePartition      =>
-        new RangeCountReader(rp, opts, filter, serConf.value)
+
+  private val rowSchema = if (countStar) new StructType() else readSchema
+
+  private def counted(rows: PartitionReader[InternalRow]): PartitionReader[InternalRow] =
+    if (countStar) new CountingReader(rows) else rows
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition.asInstanceOf[MailboxPartition] match {
+      case sp: StaticRowsPartition => new StaticRowsReader(sp)
       case pp: PstPartition =>
-        if (pp.exact) new StaticCountReader(pp.nodeIds.length.toLong)
-        else new PstCountReader(pp, opts, filter, serConf.value)
+        counted(new PstPartitionReader(pp, rowSchema, opts, filter, serConf.value))
+      case mp: MbxPartition =>
+        counted(new MailboxPartitionReader(mp, rowSchema, opts, filter, serConf.value))
     }
-    else p match {
-      case pp: PstPartition =>
-        new PstPartitionReader(pp, readSchema, opts, filter, serConf.value)
-      case _ =>
-        new MailboxPartitionReader(p, readSchema, opts, filter, serConf.value)
-    }
-  }
 }
 
-/** A9 — count(*) from planning statistics: one row with the partition's
-  * exact planned count; no file IO at execution time.
-  */
-/** Emits the single stats-answered aggregate row (zero IO). */
-class StaticStatsReader(values: Array[Long], nulls: Array[Boolean])
-  extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = if (emitted) false else { emitted = true; true }
-  override def get(): InternalRow = new GenericInternalRow(
-    values.indices.map(i =>
-      if (nulls(i)) null else values(i): Any).toArray)
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
-}
-
-class GroupStatsReader(classes: Array[String],
-    values: Array[Array[Long]], nulls: Array[Array[Boolean]])
-  extends PartitionReader[InternalRow] {
+/** Emits a static partition's precomputed rows (zero IO). */
+class StaticRowsReader(p: StaticRowsPartition) extends PartitionReader[InternalRow] {
   private var i = -1
-  override def next(): Boolean = { i += 1; i < classes.length }
-  override def get(): InternalRow = new GenericInternalRow(
-    (UTF8String.fromString(classes(i)): Any) +:
-      values(i).indices.map(j =>
-        if (nulls(i)(j)) null else values(i)(j): Any).toArray)
+  override def next(): Boolean = { i += 1; i < p.rows.length }
+  override def get(): InternalRow = p.rows(i)
   override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    MailboxMetrics.report(p.rowsRead, 0L, firstInFile = false)
 }
 
-class StaticCountReader(count: Long) extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = if (emitted) false else { emitted = true; true }
+/** A9 — count(*) over a partition planning could not count (a byte
+  * range, a class-filtered PST slice): drains the row reader and emits
+  * one row with the count. Metrics are the row reader's own.
+  */
+class CountingReader(rows: PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private var count = -1L
+  override def next(): Boolean =
+    if (count >= 0) false
+    else { count = 0L; while (rows.next()) count += 1; true }
   override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, 0L))
+  override def close(): Unit = rows.close()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    rows.currentMetricsValues()
 }
 
 /** Streams lines of one partition's byte span through a Hadoop FS input
@@ -1166,59 +1082,18 @@ private[source] final class LineStream(
   def close(): Unit = fsIn.close()
 }
 
-/** Distributed count(*) over an unindexed byte range: classify-only scan,
-  * no JSON parse, no row materialization.
-  */
-class RangeCountReader(
-    p: RangePartition, opts: MailboxOptions,
-    filter: RecordFilter, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private var counted    = false
-  private var count      = 0L
-  private var bytes      = 0L
-
-  override def next(): Boolean = {
-    if (counted) return false
-    val ls  = new LineStream(p.file, p.start, conf, alignToNewline = true)
-    val end = p.start + p.length
-    try {
-      // Hadoop boundary rule: a line starting at pos <= end belongs to
-      // this split (the next split's align-skip discards it)
-      var line = if (ls.pos <= end) ls.next(keepAll = false) else null
-      while (line != null) {
-        val prefix = line._1
-        if (prefix.startsWith("{\"node_id\":") &&
-            MailboxPlanner.lineMatches(prefix, filter))
-          count += 1
-        line = if (ls.pos <= end) ls.next(keepAll = false) else null
-      }
-      bytes = ls.bytesRead
-    } finally ls.close()
-    counted = true
-    true
-  }
-
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, bytes),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, if (p.firstInFile) 1L else 0L))
-}
-
 /** Per-task reader (A15-A18): streams its byte span sequentially through
   * the Hadoop FS, parses only projected fields, null-tolerant per field.
   */
 class MailboxPartitionReader(
-    p: MailboxPartition,
+    p: MbxPartition,
     readSchema: StructType,
     opts: MailboxOptions,
     filter: RecordFilter,
     conf: Configuration) extends PartitionReader[InternalRow] {
 
-  private val mapper  = new ObjectMapper()
-  private val factory = mapper.getFactory
+  private lazy val mapper  = new ObjectMapper()
+  private lazy val factory = mapper.getFactory
 
   private val (startAt, align) = p match {
     case ip: IndexedPartition => (ip.startOffset, false)
@@ -1229,6 +1104,9 @@ class MailboxPartitionReader(
   private val stream = new LineStream(p.file, startAt, conf, align)
 
   private var rowsRead = 0L
+  // the record `next` stopped on; `get` builds its row once, so a count
+  // (which never calls `get`) only classifies
+  private var currentLine: Array[Byte] = _
   private var current: InternalRow = _
   private var currentNodeId: Long = -1L
 
@@ -1242,11 +1120,13 @@ class MailboxPartitionReader(
   private val bodyBudget: Long =
     if (opts.bodySizeBytes <= 0) 0L else opts.bodySizeBytes
 
+  // a projection of meta columns only (count(*) projects none) needs no
+  // record content: classify on the line prefix, never buffer or parse
+  private val metaFields = MailboxTable.MetaColumns
+  private val needContent = readSchema.fields.exists(f => !metaFields.contains(f.name))
   // fast path: if every projected field is a top-level scalar, extract
   // values with the streaming parser and never build a JsonNode tree
   // (~2-3x less allocation on analytic projections)
-  private val metaFields =
-    Set("pst_path", "pst_name", "__partition", "__node_id")
   private val flatOnly: Boolean = readSchema.fields.forall { f =>
     metaFields.contains(f.name) || (f.dataType match {
       case _: ArrayType | _: StructType => false
@@ -1255,6 +1135,10 @@ class MailboxPartitionReader(
   }
   private val fieldIndex: Map[String, Int] =
     readSchema.fieldNames.zipWithIndex.toMap
+  // the node id is parsed from the record head only when projected
+  private val wantNodeId = fieldIndex.contains("__node_id")
+  private def nodeIdOf(prefix: String): Long =
+    if (wantNodeId) MailboxPlanner.nodeIdOf(prefix) else -1L
 
   override def next(): Boolean = p match {
     case ip: IndexedPartition =>
@@ -1263,7 +1147,7 @@ class MailboxPartitionReader(
         var emitted = false
         var eof     = false
         while (!emitted && !eof) {
-          val line = stream.next(keepAll = skipped >= ip.skipMatching)
+          val line = stream.next(keepAll = needContent && skipped >= ip.skipMatching)
           if (line == null) eof = true
           else {
             val prefix = line._1
@@ -1271,7 +1155,7 @@ class MailboxPartitionReader(
                 MailboxPlanner.lineMatches(prefix, filter)) {
               if (skipped < ip.skipMatching) skipped += 1
               else {
-                emit(line._2, MailboxPlanner.nodeIdOf(prefix))
+                emit(line._2, nodeIdOf(prefix))
                 taken += 1
                 emitted = true
               }
@@ -1290,13 +1174,13 @@ class MailboxPartitionReader(
         // starts at pos <= end (the next range's align-skip discards it)
         if (stream.pos > end) done = true
         else {
-          val line = stream.next(keepAll = true)
+          val line = stream.next(keepAll = needContent)
           if (line == null) done = true
           else {
             val prefix = line._1
             if (prefix.startsWith("{\"node_id\":") &&
                 MailboxPlanner.lineMatches(prefix, filter)) {
-              emit(line._2, MailboxPlanner.nodeIdOf(prefix))
+              emit(line._2, nodeIdOf(prefix))
               emitted = true
             }
           }
@@ -1312,26 +1196,31 @@ class MailboxPartitionReader(
         // offsets are exact line starts from planning: seek, never
         // re-read the bytes between enumerated records
         if (target != stream.pos) stream.seekTo(target)
-        val line = stream.next(keepAll = true)
+        val line = stream.next(keepAll = needContent)
         if (line == null) false
         else { emit(line._2, ep.nodeIds(enumIdx)); true }
       }
   }
 
   private def emit(lineBytes: Array[Byte], nodeId: Long): Unit = {
+    currentLine = lineBytes
     currentNodeId = nodeId
+    current = null
     rowsRead += 1
-    current =
-      try {
-        if (flatOnly) rowOfStreaming(lineBytes)
-        else rowOf(mapper.readTree(lineBytes))
-      } catch { case NonFatal(_) => nullRow() }
   }
 
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, rowsRead),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, stream.bytesRead),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead, if (p.firstInFile) 1L else 0L))
+  override def get(): InternalRow = {
+    if (current == null) current =
+      if (!needContent) metaRow()
+      else try {
+        if (flatOnly) rowOfStreaming(currentLine)
+        else rowOf(mapper.readTree(currentLine))
+      } catch { case NonFatal(_) => metaRow() }
+    current
+  }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    MailboxMetrics.report(rowsRead, stream.bytesRead, p.firstInFile)
 
   /** Streaming extraction of projected top-level scalars. */
   private def rowOfStreaming(line: Array[Byte]): InternalRow = {
@@ -1390,7 +1279,8 @@ class MailboxPartitionReader(
     fieldIndex.get("__node_id").foreach(i => values(i) = currentNodeId)
   }
 
-  private def nullRow(): InternalRow = {
+  /** The meta columns filled, every record column NULL. */
+  private def metaRow(): InternalRow = {
     val values = new Array[Any](readSchema.length)
     fillMeta(values)
     new GenericInternalRow(values)
@@ -1448,6 +1338,5 @@ class MailboxPartitionReader(
     case _ => null
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit = stream.close()
 }

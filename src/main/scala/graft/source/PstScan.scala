@@ -103,11 +103,15 @@ class PstPartitionReader(
     conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val wantFolder = filter.wantFolder
-  private lazy val pst    = PstFile.open(p.file, conf)
+  // opened on first use: a meta-only projection of exact nodes never is
+  private var opened      = false
+  private lazy val pst    = { val f = PstFile.open(p.file, conf); opened = true; f }
   private lazy val reader = new PstReader(pst)
 
-  private val fieldIndex: Map[String, Int] =
-    readSchema.fieldNames.zipWithIndex.toMap
+  // a projection of meta columns only (count(*) projects none) needs no
+  // node content: classify, never serialize
+  private val needContent =
+    readSchema.fields.exists(f => !MailboxTable.MetaColumns.contains(f.name))
   private val bodyBudget: Long =
     if (opts.bodySizeBytes <= 0) 0L else opts.bodySizeBytes
 
@@ -126,11 +130,13 @@ class PstPartitionReader(
       val nid = p.nodeIds(i)
       try {
         if (wantFolder) {
-          current = project(reader.folderRow(nid), nid)
+          current = project(
+            if (needContent) reader.folderRow(nid) else Map.empty, nid)
           found = true
         } else if (p.exact || filter.matchesClass(reader.messageClass(nid))) {
           current = project(
-            reader.messageRow(nid, opts.readAttachmentBody), nid)
+            if (needContent) reader.messageRow(nid, opts.readAttachmentBody)
+            else Map.empty, nid)
           found = true
         }
       } catch {
@@ -175,54 +181,8 @@ class PstPartitionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (rowsRead > 0 || i >= 0) pst.close()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, rowsRead),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead,
-      if (i >= 0) pst.bytesRead else 0L),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead,
-      if (p.firstInFile) 1L else 0L))
-}
-
-/** Distributed count(*) for class-filtered PST scans: reads only each
-  * candidate node's property context to classify it — no recipient /
-  * attachment / body materialization.
-  */
-class PstCountReader(
-    p: PstPartition, opts: MailboxOptions,
-    filter: RecordFilter, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private var counted = false
-  private var count   = 0L
-  private var bytes   = 0L
-
-  override def next(): Boolean = {
-    if (counted) return false
-    val pst = PstFile.open(p.file, conf)
-    try {
-      val reader = new PstReader(pst)
-      p.nodeIds.foreach { nid =>
-        try {
-          if (filter.matchesClass(reader.messageClass(nid)))
-            count += 1
-        } catch {
-          // the row reader serializes a malformed node as a null row, so
-          // it must count here too (count(*) parity with the full scan)
-          case NonFatal(_) => count += 1
-        }
-      }
-      bytes = pst.bytesRead
-    } finally pst.close()
-    counted = true
-    true
-  }
-
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    MailboxMetrics.Task(MailboxMetrics.RowsRead, count),
-    MailboxMetrics.Task(MailboxMetrics.BytesRead, bytes),
-    MailboxMetrics.Task(MailboxMetrics.FilesRead,
-      if (p.firstInFile) 1L else 0L))
+  override def close(): Unit = if (opened) pst.close()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    MailboxMetrics.report(rowsRead, if (opened) pst.bytesRead else 0L,
+      p.firstInFile)
 }

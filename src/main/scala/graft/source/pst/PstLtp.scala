@@ -156,11 +156,7 @@ final class PropertyContext(heap: HeapNode) {
 /** Table context (MS-PST §2.3.4): column descriptors + row matrix. */
 final class TableContext(pst: PstFile, heap: HeapNode) {
   import Lit._
-
-  final case class Col(tag: Long, ibData: Int, cbData: Int, iBit: Int) {
-    def propId: Int   = ((tag >> 16) & 0xFFFF).toInt
-    def propType: Int = (tag & 0xFFFF).toInt
-  }
+  import TableContext.Col
 
   private val info = heap.alloc(heap.userRoot)
   require(u8(info, 0) == 0x7C, "not a TCINFO")
@@ -219,6 +215,13 @@ final class TableContext(pst: PstFile, heap: HeapNode) {
       val hnid = u32(row, col.ibData)
       Some(PropValue(t, heap.hnidBytes(hnid), 0L))
     }
+  }
+}
+
+object TableContext {
+  final case class Col(tag: Long, ibData: Int, cbData: Int, iBit: Int) {
+    def propId: Int   = ((tag >> 16) & 0xFFFF).toInt
+    def propType: Int = (tag & 0xFFFF).toInt
   }
 }
 

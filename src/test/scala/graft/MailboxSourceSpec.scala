@@ -3,7 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -206,6 +208,42 @@ class MailboxSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("countStarPushdown=true"), s"plan was:\n$plan")
     assert(df.collect()(0).getLong(0) === 812L)
+  }
+
+  /** The scan's summed `mailboxRowsRead` task metric after `df` ran. */
+  private def rowsRead(df: DataFrame): Long =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case scan: BatchScanExec => scan.metrics("mailboxRowsRead").value
+    }.sum
+
+  test("pushed count(*) equals the materialized scan on every mode and planning path (A9)") {
+    val pdir = Files.createTempDirectory("mailbox_count_parity").toFile
+    val indexed = new File(pdir, "indexed.mbx")
+    MailboxGen.writeFile(indexed, MailboxGen.unittestLines)
+    val bare = new File(pdir, "bare.mbx") // > 64 KiB: several byte ranges
+    MailboxGen.writeFile(bare, MailboxGen.syntheticLines(8, 400, 2),
+      writeIndex = false)
+    val pst = new File("fixtures/mailbox/unittest_ansi.pst")
+    assert(pst.isFile, s"missing fixture ${pst.getAbsolutePath}")
+    val ranges = Map("partition_bytes" -> "65536")
+    val cases = Seq(
+      ("indexed .mbx", indexed.getPath, Map.empty[String, String]),
+      ("range splits", bare.getPath, ranges),
+      ("enumerated read_limit", bare.getPath,
+        Map("read_limit" -> "150", "partition_size" -> "16")),
+      ("indexed + unindexed glob", new File(pdir, "*.mbx").getPath, ranges),
+      ("pst", pst.getPath, Map("partition_size" -> "4")))
+    val modes = Seq("folders", "messages", "notes", "contacts",
+      "appointments", "sticky_notes", "tasks", "distribution_lists")
+    for ((name, path, opts) <- cases; mode <- modes) {
+      val scanned = Mailbox.read(spark, path, mode, opts).collect().length
+      val counted = Mailbox.read(spark, path, mode, opts).groupBy().count()
+      val plan = counted.queryExecution.executedPlan.toString
+      assert(plan.contains("countStarPushdown=true"), s"$name/$mode plan:\n$plan")
+      val n = counted.collect()(0).getLong(0)
+      assert(n === scanned.toLong, s"$name/$mode")
+      assert(rowsRead(counted) === n, s"$name/$mode rows-read metric")
+    }
   }
 
   test("projection pushdown narrows the read schema (A7)") {
